@@ -40,6 +40,12 @@ Scale design (100 TB / 1000-executor): two ingest shapes, selected by
   durable-consumer / queue-group model (SURVEY §7.3), structurally the
   same split contract as Kafka's (topic, partition, offsets). Works for
   both the bounded batch read and per-trigger micro-batch streaming.
+
+Sinks: ``df.write.format("nats")`` is a Python ``DataSourceWriter``.
+``df.writeStream.format("nats")`` runs as a driver-side ``foreachBatch``
+once :func:`register` has run: each epoch is collected and published by
+:class:`NatsStreamWriter` after the epoch's job succeeds. Every output
+mode (append, complete, update) is accepted.
 """
 
 from __future__ import annotations
@@ -51,7 +57,6 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
     DataSourceWriter,
     InputPartition,
     WriterCommitMessage,
@@ -1020,37 +1025,50 @@ class NatsBatchWriter(DataSourceWriter, _OptionsMixin):
         pass
 
 
-class NatsStreamWriter(DataSourceStreamWriter, _OptionsMixin):
+class NatsStreamWriter(_OptionsMixin):
     """Streaming sink: ``df.writeStream.format("nats")`` publishes every
-    micro-batch's rows as CSV wire lines to a subject.
+    micro-batch's rows as CSV wire lines to a subject. The only code that
+    encodes and publishes streamed sink rows.
 
-    Task side encodes (``write``); the driver-side ``commit(messages,
-    batchId)`` publishes after ALL tasks of the epoch succeed — so a
-    failed/retried task never half-publishes an epoch (transactional
-    batch boundary; an executor-side direct publish would be at-least-
-    once instead).
+    It runs as the query's driver-side ``foreachBatch`` function
+    (:func:`register` installs that): the epoch's rows are collected on
+    the driver, all encoded, then published — so an epoch whose job
+    fails, or that holds one unencodable value, publishes nothing. Any
+    output mode works, ``update`` included. Spark's Python
+    ``DataSourceStreamWriter`` path would add a planner round trip, a
+    Python write stage and a commit runner to every epoch, ~0.7 s
+    (PERFORMANCE.md, "Stream sink per-epoch cost").
     """
 
     def __init__(self, schema: T.StructType, options: dict) -> None:
         self.options = {k.lower(): v for k, v in options.items()}
         CsvCodec(schema)  # validate the schema against wire rules
+        self._timestamps = [
+            f.name for f in schema.fields if isinstance(f.dataType, T.TimestampType)
+        ]
 
-    def write(self, rows) -> NatsCommitMessage:
-        lines = [",".join(_encode_value(v) for v in row).encode("utf-8") for row in rows]
-        return NatsCommitMessage(lines=lines)
-
-    def commit(self, messages, batchId: int) -> None:
+    def __call__(self, batch_df, batch_id: int) -> None:
         from datafusion_nats_spark.sources.broker import get_broker
 
-        broker = get_broker(self.url)
-        for message in messages:
-            if message is None:
-                continue
-            for line in message.lines:
-                broker.publish(self.subject, line)
+        if self._timestamps:
+            from pyspark.sql import functions as F
 
-    def abort(self, messages, batchId: int) -> None:
-        pass
+            # collect() renders TIMESTAMP values in this Python process's
+            # local zone; as TIMESTAMP_NTZ they carry the session time
+            # zone's wall clock instead
+            batch_df = batch_df.withColumns(
+                {
+                    c: F.col(f"`{c.replace('`', '``')}`").cast("timestamp_ntz")
+                    for c in self._timestamps
+                }
+            )
+        lines = [
+            ",".join(_encode_value(v) for v in row).encode("utf-8")
+            for row in batch_df.collect()
+        ]
+        broker = get_broker(self.url)
+        for line in lines:
+            broker.publish(self.subject, line)
 
 
 class NatsDataSource(DataSource):
@@ -1099,13 +1117,83 @@ class NatsDataSource(DataSource):
     def writer(self, schema: T.StructType, overwrite: bool) -> NatsBatchWriter:
         return NatsBatchWriter(schema, dict(self.options))
 
-    def streamWriter(self, schema: T.StructType, overwrite: bool) -> NatsStreamWriter:
-        return NatsStreamWriter(schema, dict(self.options))
-
 
 def register(spark) -> None:
-    """Register the source: ``spark.read.format("nats")`` becomes available."""
+    """Register the source: ``spark.read.format("nats")`` becomes
+    available, and ``df.writeStream.format("nats")`` runs as a driver-side
+    ``foreachBatch`` publish (:func:`_install_stream_sink`)."""
     spark.dataSource.register(NatsDataSource)
+    _install_stream_sink()
+
+
+def _install_stream_sink() -> None:
+    """Wrap ``DataStreamWriter`` so that a ``format("nats")`` query starts
+    as a ``foreachBatch`` of :class:`NatsStreamWriter`. Installed once per
+    process; a second call is a no-op.
+
+    The wrapped methods record, per writer, whether its format is
+    ``nats`` (``format``, ``start(format=...)``; a later ``foreach`` or
+    ``foreachBatch`` replaces it, as in Spark) and its options
+    (``option``, ``options``, ``start(**options)``). Every call still
+    reaches Spark's own method, so other formats are untouched.
+    """
+    import functools
+
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+    from pyspark.sql.utils import to_str
+
+    if getattr(DataStreamWriter.start, "_nats_installed", False):
+        return
+    base = {
+        name: getattr(DataStreamWriter, name)
+        for name in ("format", "option", "options", "foreach", "foreachBatch", "start")
+    }
+
+    def record(self, options: dict) -> None:
+        recorded = self.__dict__.setdefault("_nats_options", {})
+        for k, v in options.items():
+            recorded[k.lower()] = to_str(v)
+
+    @functools.wraps(base["format"])
+    def format(self, source):
+        self._nats_sink = str(source).lower() == NatsDataSource.name()
+        return base["format"](self, source)
+
+    @functools.wraps(base["option"])
+    def option(self, key, value):
+        record(self, {key: value})
+        return base["option"](self, key, value)
+
+    @functools.wraps(base["options"])
+    def options(self, **opts):
+        record(self, opts)
+        return base["options"](self, **opts)
+
+    @functools.wraps(base["foreach"])
+    def foreach(self, f):
+        self._nats_sink = False
+        return base["foreach"](self, f)
+
+    @functools.wraps(base["foreachBatch"])
+    def foreachBatch(self, func):
+        self._nats_sink = False
+        return base["foreachBatch"](self, func)
+
+    @functools.wraps(base["start"])
+    def start(self, path=None, format=None, outputMode=None, partitionBy=None,
+              queryName=None, **opts):
+        if format is not None:
+            self.format(format)
+        if getattr(self, "_nats_sink", False):
+            self.options(**opts)
+            opts = {}
+            base["foreachBatch"](self, NatsStreamWriter(self._df.schema, self._nats_options))
+        return base["start"](self, path, None, outputMode, partitionBy, queryName, **opts)
+
+    start._nats_installed = True
+    for name, fn in (("format", format), ("option", option), ("options", options),
+                     ("foreach", foreach), ("foreachBatch", foreachBatch), ("start", start)):
+        setattr(DataStreamWriter, name, fn)
 
 
 def read_nats(spark, schema: T.StructType, vectorized: bool = False, **options):

@@ -131,6 +131,9 @@ class MiniNatsClient:
         self._sock = socket.create_connection(
             (self.host, self.port), timeout=self.timeout_s
         )
+        # request() writes SUB then PUB as two small frames; with Nagle on,
+        # the second waits for the peer's delayed ACK (~40 ms per call)
+        self._sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         self._rfile = self._sock.makefile("rb")
         # The whole handshake runs under timeout_s: a TCP service that
         # accepts but never writes (which a connect-only reachability probe
@@ -447,6 +450,8 @@ class MiniNatsServer:
                 conn, _ = self._listener.accept()
             except OSError:
                 return
+            # replies are small frames too: no Nagle/delayed-ACK stall
+            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
             with self._lock:
                 self._conns.append(conn)
                 self._client_seq += 1

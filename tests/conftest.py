@@ -20,6 +20,15 @@ os.environ.setdefault(
     os.path.join(tempfile.gettempdir(), f"dn_broker_test_{os.getpid()}"),
 )
 
+# Heap of every Spark JVM the suite starts: the session fixture's and the
+# local[2]/local[32] child sessions of test_partition_invariance, which
+# inherit this environment. G1 grows a heap toward its maximum and keeps
+# it, so with the 8g default the session's JVM held ~8.5 GB resident by
+# the time a child session started, and on a 16 GB host the kernel's OOM
+# killer ended it — every later Spark test then failed with "Connection
+# refused". At 4g the session JVM and one child fit side by side.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+
 
 @pytest.fixture(scope="session", autouse=True)
 def _broker_dir_cleanup():

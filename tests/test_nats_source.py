@@ -1140,3 +1140,232 @@ def test_decode_raw_respects_declared_column_name(spark, broker):
             T.StructType([T.StructField("a", T.IntegerType(), False)]),
             {"url": "memory://test", "subject": "raw.named", "decode": "raw"},
         )
+
+
+# -- the nats stream sink: a driver-side foreachBatch publish ----------------
+
+ALL_TYPES = "i INT, d DOUBLE, s STRING, b BOOLEAN, ts TIMESTAMP, day DATE"
+ALL_TYPES_LINES = [
+    b"42,3.14159,John Doe,true,2025-07-25 15:42:35,2025-07-25",
+    b"-7,-0.5,x,false,1999-12-31 23:59:59,2000-02-29",
+    b"0,1000000.25,tail space ,true,1970-01-01 00:00:00,1970-01-01",
+]
+
+
+def _stream_in(spark, subject, schema=KV_SCHEMA):
+    return (
+        spark.readStream.format("nats")
+        .schema(schema)
+        .option("url", "memory://test")
+        .option("subject", subject)
+        .load()
+    )
+
+
+def _drive(q, *publishes):
+    """Run ``q`` over what is published, then over each later batch of
+    publishes (one epoch per batch); always stops it."""
+    try:
+        q.processAllAvailable()
+        for publish in publishes:
+            publish()
+            q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def test_stream_sink_wire_types_match_batch_writer(spark, broker, tmp_path):
+    """Every wire type the codec supports publishes the same bytes through
+    writeStream.format('nats') as through write.format('nats'); BIGINT is
+    not a wire type, and both sinks refuse it."""
+    from datafusion_nats_spark.codec import SchemaValidationError
+
+    for line in ALL_TYPES_LINES:
+        broker.publish("types_in", line)
+    _drive(
+        _stream_in(spark, "types_in", ALL_TYPES)
+        .writeStream.format("nats")
+        .option("url", "memory://test")
+        .option("subject", "types_stream")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .start()
+    )
+    (
+        spark.read.format("nats").schema(ALL_TYPES)
+        .option("url", "memory://test").option("subject", "types_in").load()
+        .write.format("nats")
+        .option("url", "memory://test").option("subject", "types_batch")
+        .mode("append").save()
+    )
+    streamed = broker.fetch("types_stream", 0)
+    assert sorted(streamed) == sorted(broker.fetch("types_batch", 0))
+    assert sorted(streamed) == sorted(ALL_TYPES_LINES)
+
+    wide = _stream_in(spark, "types_in", ALL_TYPES).selectExpr("CAST(i AS BIGINT) AS i")
+    with pytest.raises(SchemaValidationError, match="bigint"):
+        wide.writeStream.format("nats").option("subject", "never").start()
+    with pytest.raises(Exception, match="bigint"):
+        spark.range(1).write.format("nats").option("url", "memory://test").option(
+            "subject", "never").mode("append").save()
+    assert broker.fetch("never", 0) == []
+
+
+def test_stream_sink_renders_timestamps_in_session_time_zone(spark, broker, tmp_path):
+    from pyspark.sql import functions as F
+
+    broker.publish("tz_in", b"0,epoch")
+    prior = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")  # UTC+9, no DST
+    try:
+        q = (
+            _stream_in(spark, "tz_in")
+            .select("id", F.timestamp_seconds("id").alias("at"))
+            .writeStream.format("nats")
+            .option("url", "memory://test")
+            .option("subject", "tz_out")
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .start()
+        )
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prior)
+    _drive(q)
+    assert broker.fetch("tz_out", 0) == [b"0,1970-01-01 09:00:00"]
+
+
+@pytest.mark.parametrize("mode", ["complete", "update"])
+def test_stream_sink_output_modes_last_wins_counts(spark, broker, tmp_path, mode):
+    """Per-key counts through the nats sink: reading the published lines
+    back, the last line per key equals the true count. update mode
+    republishes only the keys an epoch changed."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    first = [b"1,a", b"2,b", b"3,a", b"4,c"]
+    second = [b"5,a", b"6,d"]
+    for p in first:
+        broker.publish("modes_in", p)
+    q = (
+        _stream_in(spark, "modes_in")
+        .groupBy("name")
+        .agg(F.count(F.lit(1)).cast("int").alias("n"))
+        .writeStream.format("nats")
+        .option("url", "memory://test")
+        .option("subject", "modes_out")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .outputMode(mode)
+        .start()
+    )
+    _drive(q, lambda: [broker.publish("modes_in", p) for p in second])
+    lines = [line.decode().split(",") for line in broker.fetch("modes_out", 0)]
+    assert dict(lines) == {"a": "3", "b": "1", "c": "1", "d": "1"}
+    second_epoch = sorted(k for k, _ in lines[3:])
+    assert second_epoch == (["a", "b", "c", "d"] if mode == "complete" else ["a", "d"])
+    assert Counter(k for k, _ in lines[:3]) == Counter("abc")
+
+
+@pytest.mark.parametrize("bad", [None, "a,b", ""], ids=["null", "comma", "empty"])
+def test_stream_sink_unencodable_value_fails_whole_epoch(spark, broker, tmp_path, bad):
+    """A NULL, a comma or an empty string fails the query with CodecError,
+    and the epoch holding it publishes none of its rows."""
+    from pyspark.sql import functions as F
+
+    broker.publish("bad_in", b"1,fine")
+    q = (
+        _stream_in(spark, "bad_in")
+        .select(
+            "id",
+            F.when(F.col("name") == "bad", F.lit(bad).cast("string"))
+            .otherwise(F.col("name"))
+            .alias("name"),
+        )
+        .writeStream.format("nats")
+        .option("url", "memory://test")
+        .option("subject", "bad_out")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .start()
+    )
+    with pytest.raises(Exception, match="CodecError"):
+        _drive(q, lambda: [broker.publish("bad_in", p) for p in (b"2,ok", b"3,bad", b"4,ok")])
+    assert broker.fetch("bad_out", 0) == [b"1,fine"]
+
+
+@pytest.mark.parametrize("via", ["option", "options", "start"])
+def test_stream_sink_options_reach_sink_every_way(spark, broker, tmp_path, via):
+    broker.publish("opt_in", b"1,x")
+    ck = str(tmp_path / "ck")
+    out = f"opt_out_{via}"
+    w = _stream_in(spark, "opt_in").writeStream
+    if via == "option":
+        q = (w.format("nats").option("URL", "memory://test").option("subject", out)
+             .option("checkpointLocation", ck).start())
+    elif via == "options":
+        q = w.format("nats").options(url="memory://test", subject=out,
+                                     checkpointLocation=ck).start()
+    else:
+        q = w.start(format="nats", url="memory://test", subject=out,
+                    checkpointLocation=ck)
+    _drive(q)
+    assert broker.fetch(out, 0) == [b"1,x"]
+
+
+def test_stream_sink_runs_as_foreach_batch_and_register_is_idempotent(
+    spark, broker, tmp_path
+):
+    """The nats sink must run on the driver-side foreachBatch path, not on
+    the per-epoch Python DataSourceStreamWriter path (~0.7 s per epoch
+    more, PERFORMANCE.md). A second register() installs nothing more: a
+    double wrapper would publish every line twice."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    start = DataStreamWriter.start
+    register(spark)
+    assert DataStreamWriter.start is start
+    broker.publish("once_in", b"1,x")
+    q = (
+        _stream_in(spark, "once_in")
+        .writeStream.format("nats")
+        .option("url", "memory://test")
+        .option("subject", "once_out")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        assert "ForeachBatchSink" in q.lastProgress["sink"]["description"]
+    finally:
+        q.stop()
+    assert broker.fetch("once_out", 0) == [b"1,x"]
+
+
+def test_other_stream_sinks_untouched(spark, broker, tmp_path):
+    """memory, noop and a user foreachBatch behave as without the nats
+    wrapper — also a foreachBatch set after format('nats'), which
+    replaces the nats sink as it does in Spark."""
+    broker.publish("other_in", b"1,x")
+    broker.publish("other_in", b"2,y")
+    _drive(_stream_in(spark, "other_in").writeStream.format("memory")
+           .queryName("other_mem").start())
+    assert sorted(tuple(r) for r in spark.table("other_mem").collect()) == [(1, "x"), (2, "y")]
+
+    noop = _stream_in(spark, "other_in").writeStream.format("noop").option(
+        "checkpointLocation", str(tmp_path / "noop")).start()
+    try:
+        noop.processAllAvailable()
+        assert noop.lastProgress["numInputRows"] == 2
+        assert "ForeachBatchSink" not in noop.lastProgress["sink"]["description"]
+    finally:
+        noop.stop()
+
+    seen = []
+    _drive(
+        _stream_in(spark, "other_in")
+        .writeStream.format("nats")
+        .option("url", "memory://test")
+        .option("subject", "other_out")
+        .foreachBatch(lambda df, _: seen.extend(tuple(r) for r in df.collect()))
+        .option("checkpointLocation", str(tmp_path / "feb"))
+        .start()
+    )
+    assert sorted(seen) == [(1, "x"), (2, "y")]
+    assert broker.fetch("other_out", 0) == []

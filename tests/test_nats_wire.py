@@ -458,3 +458,17 @@ def test_jetstream_headers_stored_and_returned(js_server):
     assert js.get_msg("HDRS", 1) == b"with"  # payload-only accessor unchanged
     info = js.stream_info("HDRS")
     assert info["state"]["messages"] == 2
+
+
+def test_both_ends_disable_nagle(server):
+    """request() writes SUB then PUB as two small frames; with Nagle on,
+    the second waits out the peer's delayed ACK. Both the client socket
+    and every connection the server accepts set TCP_NODELAY."""
+    with MiniNatsClient(server.url) as c:
+        c.flush()
+        assert c._sock.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY)
+        with server._lock:
+            conns = list(server._conns)
+        assert conns
+        for conn in conns:
+            assert conn.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY)
